@@ -449,12 +449,7 @@ def main() -> None:
             # each invocation builds fresh intra-query caches — drop them
             # so later queries aren't squeezed by accumulated storage
             spark.catalog.clearCache()
-            # streaming queries leave their memory-sink tables registered;
-            # dropping them (and nudging the JVM GC) keeps later queries
-            # from paying another query's heap
-            for tbl in spark.catalog.listTables():
-                if tbl.name.startswith("stream_out_"):
-                    spark.catalog.dropTempView(tbl.name)
+        # nudging the JVM GC keeps later queries from paying this one's heap
         try:
             spark.sparkContext._jvm.System.gc()
         except Exception:

@@ -17,20 +17,18 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame
 
+from .session import pinned_conf
+
 
 def assert_compiles(df: DataFrame, n: int | None = None) -> None:
     """Execute ``df`` (all rows, or ``limit(n)``) with codegen fallback
     DISABLED so a whole-stage-codegen compile failure raises instead of
     silently running interpreted. Restores the previous conf either
-    way. Use in tests/CI on plans whose performance contract depends
-    on staying compiled — a pass means every generated stage actually
+    way, and holds ``session.pinned_conf``'s lock for the whole run.
+    Use in tests/CI on plans whose performance contract depends on
+    staying compiled — a pass means every generated stage actually
     compiled; interpreted fallback becomes a loud failure, not a log
     line nobody greps.
     """
-    spark = df.sparkSession
-    prev = spark.conf.get("spark.sql.codegen.fallback", "true")
-    spark.conf.set("spark.sql.codegen.fallback", "false")
-    try:
+    with pinned_conf(df.sparkSession, {"spark.sql.codegen.fallback": "false"}):
         (df.limit(n) if n is not None else df).collect()
-    finally:
-        spark.conf.set("spark.sql.codegen.fallback", prev)

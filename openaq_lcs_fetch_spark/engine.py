@@ -227,7 +227,8 @@ class Engine:
             store = CheckpointStore(out_root)
             # the summary pass already computed the checkpoint-format
             # mark over this very frame — advance() skips its own
-            # full-plan aggregation (one fewer evaluation per run)
+            # full-plan aggregation (one fewer evaluation per run); an
+            # empty batch's mark is None, which keeps the stored mark
             log["checkpoint"] = advance(
                 store, provider, measures, "timestamp", hwm=hwm_pre
             )

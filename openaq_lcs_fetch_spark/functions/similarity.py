@@ -133,28 +133,6 @@ def lsh_candidate_pairs(
     )
 
 
-def signature_similarity(
-    signatures: DataFrame, pairs: DataFrame, id_col: str, k: int
-) -> DataFrame:
-    """MinHash Jaccard estimate for candidate pairs: fraction of equal
-    signature components."""
-    sig_a = signatures.select(
-        F.col(id_col).alias("id_a"), *[F.col(f"mh{i}").alias(f"a{i}") for i in range(k)]
-    )
-    sig_b = signatures.select(
-        F.col(id_col).alias("id_b"), *[F.col(f"mh{i}").alias(f"b{i}") for i in range(k)]
-    )
-    # per-doc signature table: joins stay hash-partitioned on doc id —
-    # AQE downgrades to broadcast when the corpus side is small
-    joined = pairs.join(sig_a, "id_a").join(sig_b, "id_b")
-    matches = sum(
-        F.when(F.col(f"a{i}") == F.col(f"b{i}"), 1).otherwise(0) for i in range(k)
-    )
-    return joined.select(
-        "id_a", "id_b", (matches / F.lit(float(k))).alias("est_jaccard")
-    )
-
-
 def lsh_similar_pairs(
     signatures: DataFrame, id_col: str, k: int, bands: int
 ) -> DataFrame:

@@ -42,10 +42,6 @@ def token_count(text: Column) -> Column:
     return F.size(tokens(text))
 
 
-def distinct_token_count(text: Column) -> Column:
-    return F.size(F.array_distinct(tokens(text)))
-
-
 def h60(s: Column) -> Column:
     """Portable 60-bit hash: first 15 hex digits of md5 as int64."""
     return F.conv(F.substring(F.md5(s), 1, 15), 16, 10).cast("long")

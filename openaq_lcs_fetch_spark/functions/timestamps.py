@@ -50,11 +50,6 @@ def from_local(col: Column, fmt: str, tz: str, shift_minutes: int = 0) -> Column
     return utc
 
 
-def to_local(ts: Column, tz: str) -> Column:
-    """UTC timestamp → wall-clock in ``tz`` (naive)."""
-    return F.from_utc_timestamp(ts, tz)
-
-
 def hour_ending(ts: Column) -> Column:
     """C7: hour-beginning → hour-ending label (+1h after truncation)
     (data354.js:108-110, aernode.js:119, iqair.js:142)."""

@@ -16,7 +16,7 @@ a few hundred rows and is always broadcast.
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, SparkSession
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from .localdf import local_df
@@ -119,14 +119,6 @@ def measurand_dim(
     (reference getSupportedMeasurands, measurand.js:47-77)."""
     df = local_df(spark, measurand_rows(lookup), MEASURAND)
     return df.filter(F.col("parameter").isin(list(supported)))
-
-
-def normalize_value(value: Column, unit: Column) -> Column:
-    """Pure-expression unit normalization (C1) — CASE WHEN chain, no UDF."""
-    expr = value  # identity default (measurand.js:34-36)
-    for u, (_nu, scale) in UNIT_CONVERSIONS.items():
-        expr = F.when(F.lower(unit) == u, value * F.lit(scale)).otherwise(expr)
-    return expr
 
 
 def join_and_normalize(

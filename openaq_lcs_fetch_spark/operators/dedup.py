@@ -62,15 +62,6 @@ def exact_dedup_groups(
     )
 
 
-def drop_exact_dups(df: DataFrame, content_col: str, id_col: str) -> DataFrame:
-    """Keep only the canonical (min-id) row of each exact-dup group."""
-    return first_per_key(
-        df.withColumn("_h", F.md5(F.col(content_col))),
-        ["_h"],
-        [F.col(id_col).asc()],
-    ).drop("_h")
-
-
 def connected_components(
     nodes: DataFrame,
     edges: DataFrame,

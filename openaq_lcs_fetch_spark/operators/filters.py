@@ -64,13 +64,6 @@ def non_sentinel(raw: Column) -> Column:
     return raw.isNotNull() & ~raw.isin(list(SENTINEL_TOKENS))
 
 
-def recode_sentinels(raw: Column) -> Column:
-    """F6 recode: sentinel → NULL (our standardized semantics; the
-    reference's smartsense maps 'inv' → -999, a quirk SURVEY.md §2.11
-    says not to replicate — we null it and callers may add a flag)."""
-    return F.when(non_sentinel(raw), raw).otherwise(F.lit(None))
-
-
 def whitelist(col: Column, allowed: list) -> Column:
     """F7 small-list form: parameter ∈ supported set (measurand.js:54-59).
     For large whitelists use a broadcast left-semi join (joins.semi_filter).

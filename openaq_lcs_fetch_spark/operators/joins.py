@@ -14,14 +14,6 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 
-def broadcast_lookup(
-    facts: DataFrame, dim: DataFrame, on: str | Sequence[str], how: str = "inner"
-) -> DataFrame:
-    """J1: measurand-style lookup join; inner == drop-on-miss
-    (clarity.js:88-94 throws per-row on miss)."""
-    return facts.join(F.broadcast(dim), on=on, how=how)
-
-
 def enrich_with_miss_report(
     facts: DataFrame, dim: DataFrame, on: str
 ) -> tuple[DataFrame, DataFrame]:
@@ -46,15 +38,6 @@ def semi_filter(facts: DataFrame, allowed: DataFrame, on: str) -> DataFrame:
     return facts.join(F.broadcast(allowed), on=on, how="left_semi")
 
 
-def anti_join(
-    left: DataFrame, right: DataFrame, on: str | Sequence[str]
-) -> DataFrame:
-    """J5: existence anti-join — e.g. skip-if-unchanged before a sink
-    (providers.js:101-116 compares new JSON against current S3 object).
-    """
-    return left.join(right, on=on, how="left_anti")
-
-
 def union_all(dfs: Sequence[DataFrame]) -> DataFrame:
     """J4: cohort fan-in (airqo.js:58-75 concat, habitatmap.js:199 page
     concat) — ``unionByName`` so column order never bites."""
@@ -63,9 +46,3 @@ def union_all(dfs: Sequence[DataFrame]) -> DataFrame:
     for df in it:
         out = out.unionByName(df)
     return out
-
-
-def surrogate_key(*cols, sep: str = "-"):
-    """J3/C3: deterministic ingest-id so station and measure sides meet
-    on an equi-join key (getSensorId builders, e.g. cpcb.js:95-105)."""
-    return F.concat_ws(sep, *cols)

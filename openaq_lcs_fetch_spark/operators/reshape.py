@@ -10,7 +10,7 @@ from __future__ import annotations
 
 from collections.abc import Sequence
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 
@@ -147,10 +147,3 @@ def nest_stations(
         )
     ).alias("sensor_systems")
     return sys_level.groupBy(*node_keys).agg(systems)
-
-
-def stack_expr(value_vars: Sequence[str], var_name: str, value_name: str) -> Column:
-    """The raw ``stack()`` expression form of melt, for SQL contexts."""
-    n = len(value_vars)
-    args = ", ".join(f"'{c}', `{c}`" for c in value_vars)
-    return F.expr(f"stack({n}, {args}) as ({var_name}, {value_name})")

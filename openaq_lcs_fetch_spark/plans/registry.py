@@ -93,19 +93,5 @@ def exact_sum(col: Column, scale: int = 6, alias: str | None = None) -> Column:
     return out.alias(alias) if alias else out
 
 
-def exact_avg(col: Column, scale: int = 6) -> Column:
-    """Exact-sum / count, both sides computed identically."""
-    return F.sum(col.cast(f"decimal(27,{scale})")).cast("double") / F.count(
-        F.lit(1)
-    ).cast("double")
-
-
 def sql_exact_sum(expr: str, scale: int = 6) -> str:
     return f"CAST(SUM(CAST({expr} AS DECIMAL(27,{scale}))) AS DOUBLE)"
-
-
-def sql_exact_avg(expr: str, scale: int = 6) -> str:
-    return (
-        f"CAST(SUM(CAST({expr} AS DECIMAL(27,{scale}))) AS DOUBLE)"
-        f" / CAST(COUNT(*) AS DOUBLE)"
-    )

@@ -21,6 +21,7 @@ from pyspark.sql import functions as F
 
 from ..operators.quantiles import range_bucket, sql_range_bucket
 from ..localdf import local_df
+from ..tables import file_meta
 from .registry import query, t
 
 # Integer-cents revenue term (see relational.py): exact and
@@ -1414,25 +1415,17 @@ _TRIANGLES_MIN_SUPPORT = 2
 #: shuffled join instead of OOMing the driver (r14 verdict item #3;
 #: guide §3.1 — broadcast only a side you know fits).
 _NODE_BCAST_MAX_ROWS = 8_000_000  # ≈ 400 MB hashed: inside every budget
-_NODE_COUNT_CACHE: dict[str, int | None] = {}  # metadata only, never rows
 
 
 def _graph_node_broadcaster(sf_dir: str):
     """``F.broadcast`` when the part catalog provably fits the broadcast
-    budget, else identity (the joins stay correct shuffled)."""
+    budget, else identity (the joins stay correct shuffled). The footer
+    count comes from ``tables.file_meta``, so a regenerated catalog is
+    re-read; an unknown size cannot prove fit."""
     import os
 
-    key = os.path.realpath(sf_dir)
-    if key not in _NODE_COUNT_CACHE:
-        try:
-            import pyarrow.parquet as pq
-
-            _NODE_COUNT_CACHE[key] = pq.ParquetFile(
-                os.path.join(sf_dir, "part.parquet")
-            ).metadata.num_rows
-        except Exception:
-            _NODE_COUNT_CACHE[key] = None  # unknown size: cannot prove fit
-    n = _NODE_COUNT_CACHE[key]
+    meta = file_meta(os.path.join(sf_dir, "part.parquet"))
+    n = meta.num_rows if meta is not None else None
     if n is not None and n <= _NODE_BCAST_MAX_ROWS:
         return F.broadcast
     return lambda df: df

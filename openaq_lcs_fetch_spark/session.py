@@ -14,6 +14,9 @@ in one place:
 from __future__ import annotations
 
 import os
+import threading
+from collections.abc import Iterator
+from contextlib import contextmanager
 
 from pyspark.sql import SparkSession
 
@@ -95,6 +98,34 @@ def tune(spark: SparkSession) -> SparkSession:
     return spark
 
 
+#: serializes every session-conf pin: the conf is session-global, and
+#: the scheduler runs many sources at once on one session.
+_PIN_LOCK = threading.Lock()
+
+
+@contextmanager
+def pinned_conf(spark: SparkSession, confs: dict[str, str]) -> Iterator[None]:
+    """Set ``confs`` on the session for the body, then restore them —
+    the package's only session-conf change after :func:`tune`.
+
+    One module lock covers set → body → restore, so two pins can never
+    race each other. A batch job that another thread plans inside the
+    window still sees the pin, so keep the body short: a streaming
+    ``start()`` (the stream clones the session there and keeps the
+    pinned values after the restore), or a test-only guard. An empty
+    ``confs`` still takes the lock, so an unpinned stream cannot clone
+    another thread's pin."""
+    with _PIN_LOCK:
+        saved = {k: spark.conf.get(k) for k in confs}
+        try:
+            for k, v in confs.items():
+                spark.conf.set(k, v)
+            yield
+        finally:
+            for k, v in saved.items():
+                spark.conf.set(k, v)
+
+
 def get_spark(app_name: str = "openaq-lcs-fetch-spark", cpus: int | None = None) -> SparkSession:
     """Build (or get) a tuned SparkSession.
 
@@ -106,8 +137,7 @@ def get_spark(app_name: str = "openaq-lcs-fetch-spark", cpus: int | None = None)
     if not os.environ.get("MASTER") and not os.environ.get("SPARK_MASTER"):
         builder = builder.master(f"local[{n}]" if n else "local[*]")
     builder = (
-        builder.config("spark.sql.shuffle.partitions", str(max(32, (n or 32))))
-        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "8g"))
+        builder.config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "8g"))
         .config(
             "spark.ui.enabled",
             os.environ.get("SPARK_GRAFT_UI", "false"),  # profiler flips on

@@ -104,9 +104,11 @@ def diff_upsert(
     # metrics (CollectMetrics) instead of a localCheckpoint job + a
     # separate aggregate job — the incoming plan (and the md5 hashing
     # above it) is evaluated exactly ONCE, inside the write action.
-    # Observed metrics are exact on success (only successful tasks
-    # contribute), and the crash-safety ordering is untouched: same
-    # staged write, same rename swap.
+    # Observed metrics skip failed tasks, so they are exact in local
+    # mode; on a cluster a re-run map stage (fetch failure) or a
+    # speculative task can add its rows twice and over-count. The
+    # crash-safety ordering is untouched: same staged write, same
+    # rename swap.
     obs_new = Observation()
     marked = hashed_new.join(
         existing.select(key, "content_hash")

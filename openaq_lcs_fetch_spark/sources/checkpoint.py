@@ -97,12 +97,16 @@ def _naive_utc(dt: datetime.datetime) -> datetime.datetime:
     return dt
 
 
+#: ``advance``'s default: no mark was passed, so compute it.
+_UNCOMPUTED: Any = object()
+
+
 def advance(
     store: CheckpointStore,
     source: str,
     df: DataFrame,
     ts_col: str,
-    hwm: str | None = None,
+    hwm: str | None = _UNCOMPUTED,
 ) -> dict[str, Any]:
     """Save the new high-water mark after a successful run; never moves
     backwards (late re-reads must not regress the checkpoint).
@@ -125,9 +129,10 @@ def advance(
     ``sinks.log.summarize``, which computes the identically-formatted
     mark in its single pass) skip the extra full-plan evaluation; it
     must be the ``high_water_mark``-format string over the same
-    ``(df, ts_col)``."""
+    ``(df, ts_col)``, or None for a batch that has no mark (no rows, or
+    no timestamps) — the stored mark then stays as it is."""
     prev = store.load(source) or {}
-    if hwm is None:
+    if hwm is _UNCOMPUTED:
         hwm = high_water_mark(df, ts_col)
     stored = prev.get("high_water_mark", "")
     if hwm is not None and stored:

@@ -15,12 +15,12 @@ from __future__ import annotations
 
 import os
 import tempfile
-import threading
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..localdf import local_df
+from ..session import pinned_conf
 from ..tables import normalize_ts
 
 TRIGGER_BY_FREQUENCY = {
@@ -284,21 +284,6 @@ def stream_state_partitions(spark: SparkSession, sf_dir: str) -> int | None:
     return min(session, max(8, math.ceil(nbytes / STATE_PARTITION_BYTES)))
 
 
-#: the state-partition pin below mutates SESSION-GLOBAL conf; without
-#: serialization two concurrent bounded runs could pin each other's
-#: count, and a batch job planned on another thread inside the bracket
-#: would silently inherit the lowered shuffle partitions (r14 verdict
-#: "what's wrong" #2). The stream itself captures the conf when
-#: ``start()`` clones the session (StreamExecution's
-#: ``sparkSessionForStream = sparkSession.cloneSession()`` runs inside
-#: startQuery — verified empirically: a stream started under a pinned
-#: conf keeps its state partitioning after the conf is restored
-#: mid-run; see test_conf_bracket_is_concurrency_safe), so the lock
-#: only needs to cover set → start → restore, a few milliseconds, not
-#: the whole query lifetime.
-_CONF_BRACKET_LOCK = threading.Lock()
-
-
 def run_available_now(
     result: DataFrame,
     output_mode: str = "append",
@@ -323,10 +308,15 @@ def run_available_now(
     same rows on the driver.
 
     ``state_partitions`` (usually ``stream_state_partitions(...)``)
-    right-sizes the query's shuffle/state partitioning to its input;
-    the session conf is restored as soon as the started stream has
-    cloned the session (under ``_CONF_BRACKET_LOCK``), so nothing
-    leaks into later queries or concurrent threads.
+    right-sizes the query's shuffle/state partitioning to its input.
+    It is pinned with ``session.pinned_conf`` around ``start()`` only:
+    the stream clones the session inside ``start()`` (StreamExecution's
+    ``sparkSessionForStream = sparkSession.cloneSession()``) and keeps
+    the pinned count after the restore (see
+    test_conf_bracket_is_concurrency_safe). Pins cannot race each
+    other and nothing leaks into later queries, but a batch job that
+    another thread plans inside the set → start → restore window still
+    sees the pin.
     """
     if output_mode not in ("append", "update", "complete"):
         raise ValueError(f"unsupported output_mode {output_mode!r}")
@@ -344,18 +334,11 @@ def run_available_now(
         .outputMode(output_mode)
         .trigger(availableNow=True)
     )
+    pin = {}
     if state_partitions is not None:
-        with _CONF_BRACKET_LOCK:
-            saved = spark.conf.get("spark.sql.shuffle.partitions")
-            spark.conf.set(
-                "spark.sql.shuffle.partitions", str(state_partitions)
-            )
-            try:
-                q = writer.start()  # the stream clones the session HERE
-            finally:
-                spark.conf.set("spark.sql.shuffle.partitions", saved)
-    else:
-        q = writer.start()
+        pin["spark.sql.shuffle.partitions"] = str(state_partitions)
+    with pinned_conf(spark, pin):
+        q = writer.start()  # the stream clones the session HERE
     q.awaitTermination()
     if output_mode == "complete":
         # complete mode re-emits the FULL result each batch (the memory

@@ -17,6 +17,7 @@ from pyspark.sql import functions as F
 
 from ..config import source_label
 from ..providers.keyed_map import RAW_SCHEMA, provider_dim, transform_measures
+from ..session import pinned_conf
 from .pipeline import TRIGGER_BY_FREQUENCY
 
 
@@ -64,31 +65,24 @@ def start_to_parquet(
     see bench.py — which is exactly why this is per-source data, not a
     global knob). Spark fixes the count in the checkpoint's offset
     metadata at first start, so it only applies to a bounded
-    ``available_now`` run where the conf save/restore brackets the
-    whole query lifetime; later restarts inherit the checkpointed
-    value regardless of the session conf."""
-    spark = measures.sparkSession
-    saved = None
+    ``available_now`` run; later restarts inherit the checkpointed
+    value regardless of the session conf. The pin is held with
+    ``session.pinned_conf`` around ``start()`` only — the stream clones
+    the session there — so the conf is back before this returns,
+    while the query runs; a batch job that another thread plans inside
+    that short window still sees the pin."""
+    pin = {}
     if state_partitions is not None and available_now:
-        saved = spark.conf.get("spark.sql.shuffle.partitions")
-        spark.conf.set("spark.sql.shuffle.partitions", str(state_partitions))
-    try:
-        writer = (
-            measures.writeStream.format("parquet")
-            .option("path", out_path)
-            .option("checkpointLocation", checkpoint)
-            .outputMode("append")
-        )
-        if available_now:
-            writer = writer.trigger(availableNow=True)
-        else:
-            writer = writer.trigger(processingTime=TRIGGER_BY_FREQUENCY[frequency])
-        q = writer.start()
-        if saved is not None:
-            # bounded run: wait it out so the conf restore below cannot
-            # race the stream's own capture of the session conf
-            q.awaitTermination()
-        return q
-    finally:
-        if saved is not None:
-            spark.conf.set("spark.sql.shuffle.partitions", saved)
+        pin["spark.sql.shuffle.partitions"] = str(state_partitions)
+    writer = (
+        measures.writeStream.format("parquet")
+        .option("path", out_path)
+        .option("checkpointLocation", checkpoint)
+        .outputMode("append")
+    )
+    if available_now:
+        writer = writer.trigger(availableNow=True)
+    else:
+        writer = writer.trigger(processingTime=TRIGGER_BY_FREQUENCY[frequency])
+    with pinned_conf(measures.sparkSession, pin):
+        return writer.start()

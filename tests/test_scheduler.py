@@ -89,3 +89,57 @@ def test_incremental_run_emits_nothing_twice(spark, tmp_path):
     r3 = engine.run_source(cfg, out)
     assert r3["n_measures"] == 1
     assert r3["checkpoint"]["high_water_mark"].startswith("2024-06-01T02")
+
+
+@pytest.mark.parametrize("sink", ["csv", "json"])
+def test_empty_incremental_run_keeps_the_mark_without_rescanning(
+    spark, tmp_path, monkeypatch, sink
+):
+    """An incremental re-run that finds no new rows must not re-evaluate
+    the provider plan for a checkpoint mark (its single-pass summary
+    already saw zero rows): the stored mark, the checkpoint file and the
+    sink's measures stay exactly as the backfill left them."""
+    import os
+
+    from openaq_lcs_fetch_spark.sources import checkpoint
+
+    feed = tmp_path / "feed.jsonl"
+    feed.write_text("\n".join(json.dumps({
+        "device_id": "d1", "ts": ts, "lat": 1.0, "lon": 2.0,
+        "readings": {"pm25": "15.0", "pm10": "20.0"}})
+        for ts in ("2024-06-01T00:00:00", "2024-06-01T01:00:00")))
+    cfg = {"schema": "v1", "provider": "keyed_map", "frequency": "hour",
+           "active": True,
+           "meta": {"path": str(feed), "incremental": "true", "sink": sink}}
+    engine = Engine(spark)
+    out = str(tmp_path / "out")
+    r1 = engine.run_source(cfg, out)
+    assert r1["n_measures"] == 4
+    provider = r1["source"]
+    ck_path = os.path.join(out, "meta", f"{provider}.json")
+
+    def readback():
+        path = f"{out}/measures/{provider}"
+        if sink == "csv":
+            df = spark.read.option("header", "true").csv(path)
+        else:
+            df = spark.read.json(path).select(F.explode("measures").alias("m"))
+            df = df.select("m.sensor_id", "m.measure", "m.timestamp")
+        return sorted(map(tuple, df.collect()))
+
+    with open(ck_path) as fh:
+        ck_before = fh.read()
+    rows_before = readback()
+    assert len(rows_before) == 4
+
+    calls = []
+    monkeypatch.setattr(
+        checkpoint, "high_water_mark", lambda *a: calls.append(a)
+    )
+    r2 = engine.run_source(cfg, out)
+    assert calls == []
+    assert r2["n_measures"] == 0
+    assert r2["checkpoint"] == r1["checkpoint"]
+    with open(ck_path) as fh:
+        assert fh.read() == ck_before
+    assert readback() == rows_before

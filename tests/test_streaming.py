@@ -119,6 +119,72 @@ def test_keyed_map_provider_stream(spark, tmp_path):
     assert {r.sensor_id for r in got.collect()} == {"keyed_map-d1-pm25"}
 
 
+def test_provider_stream_pin_is_released_at_start(spark, tmp_path):
+    """start_to_parquet(state_partitions=N) pins N around start() only:
+    a batch thread that looks while the caller waits on the running
+    stream sees the session's own shuffle partitions, and the stream
+    still records N in its checkpoint's offset metadata. Deterministic:
+    the batch thread looks only once someone waits on the started
+    query, i.e. after start() has returned."""
+    import threading
+
+    from pyspark.sql.streaming.query import StreamingQuery
+
+    from openaq_lcs_fetch_spark.streaming.provider_stream import (
+        keyed_map_stream,
+        start_to_parquet,
+    )
+
+    src = tmp_path / "in"
+    src.mkdir()
+    _write_jsonl(src / "b1.json", [
+        {"device_id": "d1", "ts": "2024-06-01T00:00:00", "lat": 1.0,
+         "lon": 2.0, "readings": {"pm25": "15.0"}},
+    ])
+    cfg = {"schema": "v1", "provider": "keyed_map", "frequency": "hour",
+           "active": True, "meta": {"path": str(src)}}
+    saved = spark.conf.get("spark.sql.shuffle.partitions")
+    assert saved != "3"
+
+    waiting, looked = threading.Event(), threading.Event()
+    seen: list[str] = []
+
+    def batch_thread():
+        waiting.wait(timeout=300)
+        seen.append(spark.conf.get("spark.sql.shuffle.partitions"))
+        looked.set()
+
+    orig = StreamingQuery.awaitTermination
+
+    def await_after_look(self, *a, **kw):
+        waiting.set()
+        looked.wait(timeout=300)
+        return orig(self, *a, **kw)
+
+    t = threading.Thread(target=batch_thread)
+    t.start()
+    StreamingQuery.awaitTermination = await_after_look
+    try:
+        q = start_to_parquet(
+            keyed_map_stream(spark, cfg), str(tmp_path / "out"),
+            str(tmp_path / "ckpt"), available_now=True, state_partitions=3,
+        )
+        q.awaitTermination()
+    finally:
+        StreamingQuery.awaitTermination = orig
+        waiting.set()
+        t.join(timeout=300)
+
+    assert seen == [saved]
+    assert spark.conf.get("spark.sql.shuffle.partitions") == saved
+    # offsets/0 is "v1", then the batch metadata JSON carrying the conf
+    # the stream runs with (fixed at its first start)
+    lines = (tmp_path / "ckpt" / "offsets" / "0").read_text().splitlines()
+    conf = json.loads(lines[1])["conf"]
+    assert conf["spark.sql.shuffle.partitions"] == "3"
+    assert spark.read.parquet(str(tmp_path / "out")).count() == 1
+
+
 def test_streaming_session_window(spark, tmp_path):
     """T6+: native session windows in a streaming aggregation (the
     gap-based sessionization user_sessions does in batch)."""

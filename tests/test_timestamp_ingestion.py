@@ -78,19 +78,19 @@ def test_load_events_always_yields_timestamp(spark, sf_dir):
 
 
 def test_load_schema_cache_is_metadata_only(spark, sf_dir):
-    """``load``'s per-process schema cache (r14: skips the per-call
-    parquet footer-inference job) must hold StructType METADATA only,
-    change neither schema nor rows, and key per resolved directory so
-    a different scale factor re-infers its own schema."""
+    """``load``'s per-process file-metadata cache (r14: skips the
+    per-call parquet footer-inference job) must hold StructType METADATA
+    only, change neither schema nor rows, and key per resolved file so a
+    different scale factor re-infers its own schema."""
     from pyspark.sql.types import StructType
 
     from openaq_lcs_fetch_spark import tables
 
-    key = (os.path.realpath(sf_dir), "nation")
-    tables._SCHEMA_CACHE.pop(key, None)
+    key = os.path.realpath(os.path.join(str(sf_dir), "nation.parquet"))
+    tables._FILE_META_CACHE.pop(key, None)
     cold = load(spark, sf_dir, "nation")
-    assert key in tables._SCHEMA_CACHE
-    assert isinstance(tables._SCHEMA_CACHE[key], StructType)
+    assert key in tables._FILE_META_CACHE
+    assert isinstance(tables._FILE_META_CACHE[key]._schema, StructType)
     warm = load(spark, sf_dir, "nation")
     assert warm.schema == cold.schema
     assert sorted(map(tuple, warm.collect())) == sorted(
@@ -101,7 +101,10 @@ def test_load_schema_cache_is_metadata_only(spark, sf_dir):
         str(sf_dir)
     ):
         load(spark, other, "nation")
-        assert (os.path.realpath(other), "nation") in tables._SCHEMA_CACHE
+        assert (
+            os.path.realpath(os.path.join(other, "nation.parquet"))
+            in tables._FILE_META_CACHE
+        )
 
 
 def test_spread_scan_is_size_gated_and_row_preserving(spark, sf_dir):
@@ -124,29 +127,63 @@ def test_spread_scan_is_size_gated_and_row_preserving(spark, sf_dir):
     size = os.path.getsize(path)
     want = min(cores, -(-size // tables._SPREAD_TASK_BYTES) or 1)
     assert spread.rdd.getNumPartitions() == want
-    old = tables._SIZE_CACHE.get(path)
+    # the cached entry of the unchanged file is what load() reads: fake
+    # its size, then put the real one back
+    meta = tables.file_meta(path)
     try:
         # width: a file worth >= cores tasks spreads to exactly cores
-        tables._SIZE_CACHE[path] = cores * tables._SPREAD_TASK_BYTES
+        meta.size = cores * tables._SPREAD_TASK_BYTES
         assert (
             load(spark, sf_dir, "supplier", spread=True).rdd.getNumPartitions()
             == cores
         )
         # width: a near-empty file spreads to ONE task, not cores
-        tables._SIZE_CACHE[path] = 1
+        meta.size = 1
         assert (
             load(spark, sf_dir, "supplier", spread=True).rdd.getNumPartitions()
             == 1
         )
         # gate: pretend the file is huge — the spread must decline
-        tables._SIZE_CACHE[path] = cores * tables._SPREAD_MIN_SPLIT_BYTES
+        meta.size = cores * tables._SPREAD_MIN_SPLIT_BYTES
         gated = load(spark, sf_dir, "supplier", spread=True)
         assert gated.rdd.getNumPartitions() == plain.rdd.getNumPartitions()
     finally:
-        if old is None:
-            tables._SIZE_CACHE.pop(path, None)
-        else:
-            tables._SIZE_CACHE[path] = old
+        meta.size = size
+
+
+def test_file_meta_follows_a_file_rewritten_in_place(spark, tmp_path, monkeypatch):
+    """A parquet file rewritten at the same path (new schema, size and
+    row count) is read again, never served from the metadata cache:
+    ``load`` sees the new schema, the ``spread=True`` width follows the
+    new size, and the graph broadcast gate the new footer row count."""
+    from openaq_lcs_fetch_spark import tables
+    from openaq_lcs_fetch_spark.plans import relational_adv
+
+    monkeypatch.setattr(relational_adv, "_NODE_BCAST_MAX_ROWS", 10)
+    cores = spark.sparkContext.defaultParallelism
+    sf = str(tmp_path)
+    path = os.path.join(sf, "part.parquet")
+
+    def write(n_rows, cols):
+        tbl = pa.table({c: pa.array(range(n_rows), pa.int64()) for c in cols})
+        pq.write_table(tbl, path, compression="none", use_dictionary=False)
+        return min(cores, -(-os.path.getsize(path) // tables._SPREAD_TASK_BYTES))
+
+    widths = []
+    for n_rows, cols, fits in (
+        (5, ["p_partkey"], True),
+        (3000, ["p_partkey", "p_size", "p_brand_id"], False),
+    ):
+        width = write(n_rows, cols)
+        widths.append(width)
+        df = load(spark, sf, "part")
+        assert df.columns == cols
+        assert df.count() == n_rows
+        assert load(spark, sf, "part", spread=True).rdd.getNumPartitions() == width
+        gate = relational_adv._graph_node_broadcaster(sf)
+        assert (gate is F.broadcast) == fits, (n_rows, gate)
+    # the rewrite moved the spread width too (not just the schema)
+    assert widths[0] == 1 and (cores == 1 or widths[1] > 1), widths
 
 
 def test_streaming_schema_tracks_the_file(spark, sf_dir):

@@ -76,9 +76,6 @@ def main() -> None:
         q = QUERIES[name]
         q.fn(spark, sf_dir).collect()  # warm codegen
         spark.catalog.clearCache()
-        for tbl in spark.catalog.listTables():
-            if tbl.name.startswith("stream_out_"):
-                spark.catalog.dropTempView(tbl.name)
 
         jobs_before = {j["jobId"] for j in _api(base, "/jobs")}
         epoch0 = time.time()
@@ -130,9 +127,6 @@ def main() -> None:
             flush=True,
         )
         spark.catalog.clearCache()
-        for tbl in spark.catalog.listTables():
-            if tbl.name.startswith("stream_out_"):
-                spark.catalog.dropTempView(tbl.name)
 
     spark.stop()
 
