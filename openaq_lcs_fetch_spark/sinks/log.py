@@ -42,7 +42,8 @@ def publish(
 ) -> None:
     row = [
         (
-            _dt.datetime.now(tz=_dt.timezone.utc).replace(tzinfo=None),
+            # aware: a naive value would be read as host-local time
+            _dt.datetime.now(tz=_dt.timezone.utc),
             source,
             status,
             n_measures,
@@ -51,9 +52,7 @@ def publish(
             message,
         )
     ]
-    # one slice → one task and ONE parquet file per published row (the
-    # default 32-slice parallelize wrote 32 files per row, 31 empty —
-    # slower to write and slower for every readback to list)
+    # a one-row local frame scans as one task: ONE parquet file per row
     with _PUBLISH_LOCK:
         local_df(spark, row, LOG_SCHEMA).write.mode("append").parquet(log_path)
 

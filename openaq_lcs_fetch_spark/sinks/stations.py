@@ -6,18 +6,20 @@ Spark-first on plain parquet (no Delta in this environment):
 
 1. content-hash both sides (md5 of the canonical JSON serialization —
    nulls stripped like station.js:176-184);
-2. **anti-join new vs existing on (key, content_hash)** → only
-   changed/new stations survive (the write-elision, J5);
-3. merge: changed rows replace same-key existing rows (first-wins
-   window on priority), everything else carries over;
-4. atomic swap of the store directory.
+2. **one pass partitioned by key over new ∪ stored rows**: a new row
+   whose hash is among its key's stored hashes is unchanged (the
+   write-elision, J5); per key a changed new row replaces the stored
+   row, everything else carries over (first-wins rank);
+3. atomic swap of the store directory.
 
 At 100 TB station dims stay tiny relative to measures, but the same
-merge works at any size: it's one hash-partitioned join on the key.
+merge works at any size: it's one hash exchange on the key.
 """
 
 from __future__ import annotations
 
+import glob
+import json
 import os
 import shutil
 import time
@@ -25,6 +27,7 @@ import uuid
 
 from pyspark.sql import DataFrame, Observation, SparkSession, Window
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 from ..localdf import local_df
 
@@ -38,6 +41,9 @@ def content_hash(df: DataFrame, key: str) -> DataFrame:
         F.md5(F.to_json(F.struct(*[F.col(c) for c in cols]), {"ignoreNullFields": "true"})),
     )
 
+
+#: footer key under which Spark records the schema of a parquet file
+_SPARK_ROW_METADATA = b"org.apache.spark.sql.parquet.row.metadata"
 
 #: staging dirs younger than this are possibly a live concurrent run's
 #: in-flight write — never delete them (concurrent upserts to one store
@@ -80,6 +86,78 @@ def _recover_store(store_path: str) -> None:
             pass  # raced with another cleaner / mid-rename — leave it
 
 
+def _check_store_schema(store_path: str, schema: StructType) -> None:
+    """Raise unless the store's column names and types are ``schema``'s.
+
+    Reads the schema Spark records in one part file's footer (metadata
+    only, no Spark job). A store without part files has nothing to
+    compare and reads as empty."""
+    parts = sorted(glob.glob(os.path.join(store_path, "*.parquet")))
+    if not parts:
+        return
+    import pyarrow.parquet as pq
+
+    footer = pq.read_schema(parts[0]).metadata
+    stored = StructType.fromJson(json.loads(footer[_SPARK_ROW_METADATA]))
+
+    def shape(s: StructType) -> dict[str, str]:
+        return {f.name: f.dataType.simpleString() for f in s.fields}
+
+    if shape(stored) != shape(schema):
+        raise ValueError(
+            f"station store {store_path} has schema {stored.simpleString()}, "
+            f"incoming rows have {schema.simpleString()}"
+        )
+
+
+def _merged(hashed_new: DataFrame, existing: DataFrame, key: str):
+    """The merged store and the Observation of its counters ``n`` (new
+    rows), ``h`` (new rows already stored) and ``t`` (merged rows),
+    in one pass partitioned by ``key``.
+
+    New rows (``_prio`` 0) and stored rows (``_prio`` 1) are unioned. A
+    new row is a hit when its hash is in its key's set of stored
+    hashes. Per key the rank is: changed new rows, then the stored row,
+    then hit new rows, ties broken by ``content_hash``; rank 1 is kept.
+    A hit row can only rank behind a stored row of its own key, so the
+    result is "changed rows replace their key, everything else carries
+    over", even for a corrupt store with duplicate keys. The counters
+    ride the write as observed metrics, so the incoming plan (and the
+    md5 hashing) is evaluated once, inside the write action. Observed
+    metrics skip failed tasks, so they are exact in local mode; on a
+    cluster a re-run map stage (fetch failure) or a speculative task
+    can add its rows twice and over-count."""
+    new_row = F.col("_prio") == 0
+    by_key = Window.partitionBy(key)
+    stored_hashes = F.collect_set(
+        F.when(~new_row, F.col("content_hash"))
+    ).over(by_key)
+    marked = (
+        hashed_new.withColumn("_prio", F.lit(0))
+        .unionByName(existing.withColumn("_prio", F.lit(1)))
+        .withColumn("_hit", new_row & F.array_contains(stored_hashes, F.col("content_hash")))
+    )
+    rank = F.row_number().over(
+        by_key.orderBy(
+            F.when(F.col("_hit"), 2).otherwise(F.col("_prio")).asc(),
+            F.col("content_hash").asc(),
+        )
+    )
+    obs = Observation()
+    result = (
+        marked.withColumn("_rn", rank)
+        .observe(
+            obs,
+            F.count(F.when(new_row, 1)).alias("n"),
+            F.count(F.when(F.col("_hit"), 1)).alias("h"),
+            F.count(F.when(F.col("_rn") == 1, 1)).alias("t"),
+        )
+        .filter(F.col("_rn") == 1)
+        .drop("_rn", "_prio", "_hit")
+    )
+    return result, obs
+
+
 def diff_upsert(
     spark: SparkSession, new: DataFrame, store_path: str, key: str
 ) -> dict[str, int]:
@@ -88,55 +166,11 @@ def diff_upsert(
     _recover_store(store_path)
     hashed_new = content_hash(new, key)
     if os.path.exists(store_path):
-        existing = spark.read.parquet(store_path)
+        _check_store_schema(store_path, hashed_new.schema)
+        existing = spark.read.schema(hashed_new.schema).parquet(store_path)
     else:
         existing = local_df(spark, [], hashed_new.schema)
-
-    # write elision: drop new rows whose (key, hash) already exists.
-    # A left join with a hit marker instead of a left_anti: the marker
-    # yields n_new, n_changed AND the changed set from one plan, where
-    # the anti-join shape needed a second full evaluation of the
-    # incoming plan just for new.count(). The store's key is unique by
-    # construction (the row_number merge below), so the left join
-    # cannot fan out; dropDuplicates guards a foreign/corrupt store.
-    # r15 (guide §1.2; r14 verdict task #2 — fuse sink writes with
-    # their counters): the counters RIDE THE MERGE WRITE as observed
-    # metrics (CollectMetrics) instead of a localCheckpoint job + a
-    # separate aggregate job — the incoming plan (and the md5 hashing
-    # above it) is evaluated exactly ONCE, inside the write action.
-    # Observed metrics skip failed tasks, so they are exact in local
-    # mode; on a cluster a re-run map stage (fetch failure) or a
-    # speculative task can add its rows twice and over-count. The
-    # crash-safety ordering is untouched: same staged write, same
-    # rename swap.
-    obs_new = Observation()
-    marked = hashed_new.join(
-        existing.select(key, "content_hash")
-        .dropDuplicates([key, "content_hash"])
-        .withColumn("_hit", F.lit(1)),
-        on=[key, "content_hash"],
-        how="left",
-    ).observe(obs_new, F.count(F.lit(1)).alias("n"), F.count("_hit").alias("h"))
-    changed = marked.filter(F.col("_hit").isNull()).drop("_hit")
-
-    merged = changed.withColumn("_prio", F.lit(0)).unionByName(
-        existing.withColumn("_prio", F.lit(1))
-    )
-    # content_hash tiebreaks same-key same-prio rows (a batch carrying
-    # two different updates for one key) — fully deterministic merge,
-    # same bar the dedup operators hold themselves to
-    w = Window.partitionBy(key).orderBy(
-        F.col("_prio").asc(), F.col("content_hash").asc()
-    )
-    # the post-merge row count (== the swapped store's count) rides the
-    # same write: no post-swap re-read of the store just to count it
-    obs_total = Observation()
-    result = (
-        merged.withColumn("_rn", F.row_number().over(w))
-        .filter(F.col("_rn") == 1)
-        .drop("_rn", "_prio")
-        .observe(obs_total, F.count(F.lit(1)).alias("t"))
-    )
+    result, obs = _merged(hashed_new, existing, key)
 
     # stage NEXT TO the store so the renames below are same-filesystem
     # (a cross-fs shutil.move degrades to a non-atomic copy), and swap
@@ -148,8 +182,7 @@ def diff_upsert(
     tag = uuid.uuid4().hex[:10]
     tmp = os.path.join(parent, f".{os.path.basename(store_path)}.new.{tag}")
     result.write.mode("overwrite").parquet(tmp)
-    counts = obs_new.get  # available once the write action completed
-    n_new, n_changed = counts["n"], counts["n"] - counts["h"]
+    counts = obs.get  # available once the write action completed
     old = os.path.join(parent, f".{os.path.basename(store_path)}.old.{tag}")
     if os.path.exists(store_path):
         os.rename(store_path, old)
@@ -157,7 +190,7 @@ def diff_upsert(
     if os.path.exists(old):
         shutil.rmtree(old)
     return {
-        "written": n_changed,
-        "skipped_unchanged": n_new - n_changed,
-        "total": obs_total.get["t"],
+        "written": counts["n"] - counts["h"],
+        "skipped_unchanged": counts["h"],
+        "total": counts["t"],
     }

@@ -70,10 +70,21 @@ def start_to_parquet(
     ``session.pinned_conf`` around ``start()`` only — the stream clones
     the session there — so the conf is back before this returns,
     while the query runs; a batch job that another thread plans inside
-    that short window still sees the pin."""
+    that short window still sees the pin.
+
+    An ``available_now`` drain runs no no-data micro-batch (the same
+    pin turns ``spark.sql.streaming.noDataMicroBatches.enabled`` off):
+    the plan's only stateful operator is the watermark
+    ``dropDuplicates`` of ``keyed_map_stream``, which emits a row the
+    first time it sees it, so that trailing batch would only evict
+    state. Eviction moves to the next drain's first batch and the
+    output is the same. ``pipeline.run_available_now`` keeps the batch:
+    its append-mode window aggregates emit closed windows in it."""
     pin = {}
-    if state_partitions is not None and available_now:
-        pin["spark.sql.shuffle.partitions"] = str(state_partitions)
+    if available_now:
+        pin["spark.sql.streaming.noDataMicroBatches.enabled"] = "false"
+        if state_partitions is not None:
+            pin["spark.sql.shuffle.partitions"] = str(state_partitions)
     writer = (
         measures.writeStream.format("parquet")
         .option("path", out_path)

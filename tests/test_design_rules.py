@@ -1,5 +1,6 @@
-"""One mechanism per concern: the session conf changes in one place and
-file metadata is cached in one place."""
+"""One mechanism per concern: the session conf changes in one place,
+file metadata is cached in one place and driver-built frames have one
+constructor."""
 
 from __future__ import annotations
 
@@ -49,3 +50,19 @@ def test_only_tables_defines_a_cache():
                 if isinstance(t, ast.Name) and t.id.endswith("_CACHE")
             ]
     assert offenders == [], "use tables.file_meta instead: " + ", ".join(offenders)
+
+
+def test_only_localdf_builds_frames_from_driver_rows():
+    """``local_df`` is the one constructor for frames built from Python
+    rows: no other module parallelizes rows or calls
+    ``createDataFrame``."""
+    offenders = [
+        f"{name}:{node.lineno} {node.func.attr}"
+        for name, tree in _modules()
+        if name != "localdf.py"
+        for node in ast.walk(tree)
+        if isinstance(node, ast.Call)
+        and isinstance(node.func, ast.Attribute)
+        and node.func.attr in ("parallelize", "createDataFrame")
+    ]
+    assert offenders == [], "use localdf.local_df instead: " + ", ".join(offenders)

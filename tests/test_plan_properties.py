@@ -556,15 +556,16 @@ def test_wilson_is_single_aggregation(spark, sf_dir):
 
 
 def test_bpe_final_plan_is_checkpoint_flat(spark, sf_dir):
-    """bpe_train_merges' output plan is one local 1-slice frame of the
-    driver-collected per-round argmax winners (r14: the winning pair is
-    ONE row per round, so it is taken to the driver instead of paying a
-    checkpoint job + broadcast exchange per round): the corpus pass and
+    """bpe_train_merges' output plan is one JVM-local frame (a
+    ``local_df`` LocalRelation) of the driver-collected per-round argmax
+    winners (r14: the winning pair is ONE row per round, so it is taken
+    to the driver instead of paying a checkpoint job + broadcast
+    exchange per round): the corpus pass and
     all vocabulary-sized round work happened inside per-round
     localCheckpoints, so the final plan reads no parquet at all."""
     tree = _plan(spark, sf_dir, "bpe_train_merges").split("\n\n")[0]
     assert tree.count("Scan parquet") == 0
-    assert tree.count("Scan ExistingRDD") == 1
+    assert tree.count("LocalTableScan") == 1
 
 
 def test_kaplan_meier_fold_is_life_table_bounded_and_guarded(spark, sf_dir):

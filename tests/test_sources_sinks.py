@@ -273,6 +273,69 @@ def test_diff_upsert_elides_unchanged(spark, tmp_path):
     assert final == {"n1": "Site A", "n2": "Site B renamed", "n3": "Site C"}
 
 
+def _corrupt_store(spark, path):
+    """A store no diff_upsert writes: n1 stored twice with one hash, n2
+    stored with two different hashes."""
+    rows = [("n1", "A"), ("n1", "A"), ("n2", "B"), ("n2", "C")]
+    content_hash(
+        spark.createDataFrame(rows, "sensor_node_id string, site string"),
+        "sensor_node_id",
+    ).write.parquet(path)
+
+
+def test_diff_upsert_on_a_corrupt_store_is_exact_and_last_writer_wins(spark, tmp_path):
+    store = str(tmp_path / "stations")
+    _corrupt_store(spark, store)
+    new = spark.createDataFrame(
+        [("n1", "A"), ("n2", "B"), ("n2", "E"), ("n3", "D")],
+        "sensor_node_id string, site string",
+    )
+    out = diff_upsert(spark, new, store, "sensor_node_id")
+    # (n1, A) and (n2, B) are stored hashes; (n2, E) and (n3, D) are not
+    assert out == {"written": 2, "skipped_unchanged": 2, "total": 3}
+    rows = spark.read.parquet(store).collect()
+    assert sorted((r.sensor_node_id, r.site) for r in rows) == [
+        ("n1", "A"), ("n2", "E"), ("n3", "D"),
+    ]
+
+
+def test_diff_upsert_merges_with_one_exchange_above_the_union(spark, tmp_path):
+    """The merge is one pass partitioned by key: no join, no broadcast,
+    one shuffle of new ∪ stored rows."""
+    from openaq_lcs_fetch_spark.sinks.stations import _merged
+
+    store = str(tmp_path / "stations")
+    _corrupt_store(spark, store)
+    new = content_hash(
+        spark.createDataFrame([("n1", "A")], "sensor_node_id string, site string"),
+        "sensor_node_id",
+    )
+    result, _ = _merged(new, spark.read.parquet(store), "sensor_node_id")
+    plan = result._jdf.queryExecution().executedPlan().toString().splitlines()
+    above = plan[: next(i for i, line in enumerate(plan) if "Union" in line)]
+    assert sum("Exchange" in line for line in above) == 1, "\n".join(plan)
+    assert not any("Join" in line for line in plan), "\n".join(plan)
+
+
+@pytest.mark.parametrize(
+    "row, ddl",
+    [
+        (("n1", 1), "sensor_node_id string, site int"),
+        (("n1", "A"), "sensor_node_id string, label string"),
+    ],
+)
+def test_diff_upsert_rejects_a_store_of_another_schema(spark, tmp_path, row, ddl):
+    """The store is read with the incoming schema, so a store whose
+    column names or types differ must raise, not read as nulls."""
+    store = str(tmp_path / "stations")
+    s1 = spark.createDataFrame([("n1", "A")], "sensor_node_id string, site string")
+    diff_upsert(spark, s1, store, "sensor_node_id")
+    s2 = spark.createDataFrame([row], ddl)
+    with pytest.raises(ValueError, match="schema"):
+        diff_upsert(spark, s2, store, "sensor_node_id")
+    assert [tuple(r)[:2] for r in spark.read.parquet(store).collect()] == [("n1", "A")]
+
+
 def test_content_hash_ignores_column_order(spark):
     a = spark.createDataFrame([("k", "x", 1)], "id string, a string, b int")
     b = spark.createDataFrame([("k", 1, "x")], "id string, b int, a string")

@@ -119,6 +119,36 @@ def test_keyed_map_provider_stream(spark, tmp_path):
     assert {r.sensor_id for r in got.collect()} == {"keyed_map-d1-pm25"}
 
 
+def test_provider_stream_drain_runs_one_batch(spark, tmp_path):
+    """A bounded drain runs its data batch and no trailing no-data
+    batch; the dedup state kept by the skipped eviction still drops a
+    re-read duplicate in the next drain."""
+    from openaq_lcs_fetch_spark.streaming.provider_stream import (
+        keyed_map_stream,
+        start_to_parquet,
+    )
+
+    src = tmp_path / "in"
+    src.mkdir()
+    row = {"device_id": "d1", "ts": "2024-06-01T00:00:00", "lat": 1.0, "lon": 2.0,
+           "readings": {"pm25": "15.0"}}
+    cfg = {"schema": "v1", "provider": "keyed_map", "frequency": "hour",
+           "active": True, "meta": {"path": str(src)}}
+    out = str(tmp_path / "out")
+    inputs = []
+    for name, rows in (("b1.json", [row]),
+                       ("b2.json", [row, {**row, "ts": "2024-06-01T04:00:00"}])):
+        _write_jsonl(src / name, rows)
+        q = start_to_parquet(keyed_map_stream(spark, cfg), out,
+                             str(tmp_path / "ckpt"), available_now=True)
+        q.awaitTermination()
+        inputs.append([p["numInputRows"] for p in q.recentProgress])
+    assert inputs == [[1], [2]]  # one progress entry per drain
+    # the re-read 00:00 reading was dropped
+    hours = spark.read.parquet(out).select(F.hour("timestamp").alias("h"))
+    assert sorted(r.h for r in hours.collect()) == [0, 4]
+
+
 def test_provider_stream_pin_is_released_at_start(spark, tmp_path):
     """start_to_parquet(state_partitions=N) pins N around start() only:
     a batch thread that looks while the caller waits on the running
