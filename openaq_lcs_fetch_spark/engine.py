@@ -8,10 +8,11 @@ streaming flavor of the same pipelines lives in streaming/.
 
 from __future__ import annotations
 
+from concurrent import futures
 from datetime import datetime as _dt, timezone as _timezone
 from typing import Any
 
-from pyspark.sql import DataFrame, Observation, SparkSession
+from pyspark.sql import DataFrame, SparkSession
 
 from pyspark.sql import functions as F
 
@@ -19,9 +20,28 @@ from . import tables
 from .providers import processor
 from .session import get_spark, tune
 from .sinks.log import publish, summarize
-from .sinks.measures import assemble_v01, write_measures_csv, write_measures_json
+from .sinks.measures import (
+    assemble_v01,
+    csv_rows,
+    write_measures_csv,
+    write_measures_json,
+)
 from .sinks.stations import diff_upsert
 from .sources.checkpoint import CheckpointStore, advance, incremental_predicate
+
+
+def _v01_locations(stations: DataFrame) -> DataFrame:
+    """The v0.1 envelope's locations[] rows from the station frame."""
+    geometry = "sensor_node_geometry" in stations.columns
+    return stations.selectExpr(
+        "sensor_node_id AS location",
+        "coalesce(sensor_node_site_name, sensor_node_id) AS label"
+        if "sensor_node_site_name" in stations.columns
+        else "sensor_node_id AS label",
+        "sensor_node_ismobile AS ismobile",
+        "sensor_node_geometry[0] AS lon" if geometry else "CAST(NULL AS DOUBLE) AS lon",
+        "sensor_node_geometry[1] AS lat" if geometry else "CAST(NULL AS DOUBLE) AS lat",
+    )
 
 
 class Engine:
@@ -52,10 +72,11 @@ class Engine:
         """One bounded ingestion run for one source (the reference's
         Lambda invocation, fetcher/index.js:12-35). Returns the run log.
 
-        dry_run short-circuits the sinks (reference DRYRUN,
-        providers.js:151-155) and reports would-be outputs. Sink paths
-        key on the source name (meta.source_name) like the reference's
-        {STACK}/measures/{provider}/ layout.
+        dry_run (reference DRYRUN, providers.js:151-155) runs the same
+        measures plan into a noop write and counts the stations instead
+        of upserting them: it reports would-be outputs and writes
+        nothing. Sink paths key on the source name (meta.source_name)
+        like the reference's {STACK}/measures/{provider}/ layout.
         """
         from .config import resolve_paths, source_label
         from .sources.secrets import merge_secret
@@ -79,158 +100,65 @@ class Engine:
                     )
                 )
 
-            from concurrent.futures import ThreadPoolExecutor
+            sink_kind = meta.get("sink", "csv")
+            # the run counters ride the measures write as one observation
+            # (before the sink's measure-IS-NOT-NULL filter, so flagged
+            # null readings count): no job of their own, and nothing that
+            # can fail after the append has started. A dry run drives
+            # the same plan into a noop write.
+            measures, read_summary = summarize(measures, provider)
 
-            if dry_run:
-                # the measures summary and the station count are
-                # independent read-only aggregates over different
-                # frames — overlap them so the second job's tasks
-                # back-fill the first one's tail (guide §2.6). Error
-                # precedence matches the sequential code: a summarize
-                # failure surfaces first.
-                with ThreadPoolExecutor(max_workers=2) as pool:
-                    f_sum = pool.submit(summarize, measures, provider)
-                    f_cnt = pool.submit(stations.count)
-                    sum_exc = cnt_exc = None
-                    try:
-                        log = f_sum.result()
-                    except Exception as e:
-                        sum_exc = e
-                    try:
-                        n_stations = f_cnt.result()
-                    except Exception as e:
-                        cnt_exc = e
-                if sum_exc is not None:
-                    raise sum_exc
-                if cnt_exc is not None:
-                    raise cnt_exc
-                log.pop("_hwm", None)
-                log["n_stations"] = n_stations
-                log["status"] = "dry-run"
-                return log
+            def _preview(frame: DataFrame) -> None:
+                frame.write.format("noop").mode("overwrite").save()
 
-            sink_kind = config.get("meta", {}).get("sink", "csv")
-
-            # r15 (guide §1.2/§4; r14 verdict task #2 — fuse the sink
-            # writes with their counters): in a REAL run the summary
-            # counters RIDE THE MEASURES SINK WRITE as observed metrics
-            # (CollectMetrics on the exact frame summarize() read —
-            # BEFORE the sink's measure-IS-NOT-NULL filter), and the
-            # station count falls out of diff_upsert's own observed
-            # counters (written + skipped == the incoming station
-            # count) — zero standalone pre-sink aggregation jobs. The
-            # JSON sink keeps the standalone summary (assemble_v01
-            # references the measures subtree from two branches, and an
-            # observation node may appear only once per query), but
-            # submits it into the SAME pool so it overlaps the sinks.
-            obs = None
-            if sink_kind != "json":
-                obs = Observation()
-                measures = measures.observe(
-                    obs,
-                    F.count(F.lit(1)).alias("n"),
-                    F.min("timestamp").alias("from_ts"),
-                    F.max("timestamp").alias("to_ts"),
-                    F.date_format(
-                        F.max("timestamp"), "yyyy-MM-dd'T'HH:mm:ss.SSSSSS"
-                    ).alias("hwm"),
+            def _measures_step() -> str | None:
+                kept = measures.filter("measure IS NOT NULL")
+                if sink_kind != "json":
+                    if dry_run:
+                        return _preview(csv_rows(kept))
+                    return write_measures_csv(kept, out_root, provider)
+                payload = assemble_v01(
+                    kept,
+                    _v01_locations(stations),
+                    provider,
+                    # the run date anchors the envelope when a batch has
+                    # zero measures (one envelope per batch)
+                    default_day=_dt.now(_timezone.utc).strftime("%Y-%m-%d"),
                 )
+                if dry_run:
+                    return _preview(payload)
+                return write_measures_json(payload, out_root, provider)
 
-            def _measures_sink() -> str:
-                if sink_kind == "json":
-                    locations = stations.selectExpr(
-                        "sensor_node_id AS location",
-                        "coalesce(sensor_node_site_name, sensor_node_id) AS label"
-                        if "sensor_node_site_name" in stations.columns
-                        else "sensor_node_id AS label",
-                        "sensor_node_ismobile AS ismobile",
-                        "sensor_node_geometry[0] AS lon"
-                        if "sensor_node_geometry" in stations.columns
-                        else "CAST(NULL AS DOUBLE) AS lon",
-                        "sensor_node_geometry[1] AS lat"
-                        if "sensor_node_geometry" in stations.columns
-                        else "CAST(NULL AS DOUBLE) AS lat",
-                    )
-                    payload = assemble_v01(
-                        measures.filter("measure IS NOT NULL"),
-                        locations,
-                        provider,
-                        # the run date anchors the envelope when a batch
-                        # has zero measures (one envelope per batch)
-                        default_day=_dt.now(_timezone.utc).strftime("%Y-%m-%d"),
-                    )
-                    return write_measures_json(payload, out_root, provider)
-                return write_measures_csv(
-                    measures.filter("measure IS NOT NULL"), out_root, provider
-                )
-
-            # the measures sink and the station upsert write DISJOINT
-            # per-provider paths — overlap them too (same §2.6 shape,
-            # same sequential error precedence: summary first, then
-            # measures sink, then upsert). The checkpoint advance and
-            # the run-log publish stay strictly AFTER both sinks — a
-            # crash mid-run must never leave an advanced checkpoint
-            # pointing past unwritten data.
-            with ThreadPoolExecutor(max_workers=3) as pool:
-                f_sum = (
-                    pool.submit(summarize, measures, provider)
-                    if obs is None
-                    else None
-                )
-                f_m = pool.submit(_measures_sink)
-                f_u = pool.submit(
-                    diff_upsert,
-                    self.spark,
-                    stations,
-                    f"{out_root}/stations/{provider}",
+            def _station_step():
+                if dry_run:
+                    return stations.count()
+                return diff_upsert(
+                    self.spark, stations, f"{out_root}/stations/{provider}",
                     "sensor_node_id",
                 )
-                s_exc = m_exc = u_exc = None
-                log = hwm_pre = None
-                if f_sum is not None:
-                    try:
-                        log = f_sum.result()
-                        hwm_pre = log.pop("_hwm", None)
-                    except Exception as e:
-                        s_exc = e
-                try:
-                    measures_path = f_m.result()
-                except Exception as e:
-                    m_exc = e
-                try:
-                    upsert_counts = f_u.result()
-                except Exception as e:
-                    u_exc = e
-            if s_exc is not None:
-                raise s_exc
-            if m_exc is not None:
-                raise m_exc
-            if u_exc is not None:
-                raise u_exc
-            if obs is not None:
-                # the summary counters observed on the sink write —
-                # same single-pass aggregate summarize() ran, zero
-                # extra evaluations of the provider plan
-                row = obs.get
-                log = {
-                    "source": provider,
-                    "n_measures": row["n"],
-                    "from_ts": row["from_ts"],
-                    "to_ts": row["to_ts"],
-                }
-                hwm_pre = row["hwm"]
+
+            # the two steps touch disjoint per-provider paths, so they
+            # overlap, and the second one's tasks back-fill the first
+            # one's tail; errors surface in sequential order.
+            # The checkpoint advance and the run-log publish stay strictly
+            # AFTER both — a crash mid-run must never leave an advanced
+            # checkpoint pointing past unwritten data.
+            with futures.ThreadPoolExecutor(max_workers=2) as pool:
+                f_m = pool.submit(_measures_step)
+                f_s = pool.submit(_station_step)
+            measures_path, station_counts = f_m.result(), f_s.result()
+            log = read_summary()
+            hwm = log.pop("_hwm")
+            if dry_run:
+                log.update(n_stations=station_counts, status="dry-run")
+                return log
             log["n_stations"] = (
-                upsert_counts["written"] + upsert_counts["skipped_unchanged"]
+                station_counts["written"] + station_counts["skipped_unchanged"]
             )
             log["measures_path"] = measures_path
-            log["stations"] = upsert_counts
-            store = CheckpointStore(out_root)
-            # the summary pass already computed the checkpoint-format
-            # mark over this very frame — advance() skips its own
-            # full-plan aggregation (one fewer evaluation per run); an
-            # empty batch's mark is None, which keeps the stored mark
+            log["stations"] = station_counts
             log["checkpoint"] = advance(
-                store, provider, measures, "timestamp", hwm=hwm_pre
+                CheckpointStore(out_root), provider, measures, "timestamp", hwm=hwm
             )
             log["status"] = "fetcher/success"
             publish(

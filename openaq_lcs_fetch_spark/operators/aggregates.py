@@ -26,22 +26,6 @@ def watermark_bounds(df: DataFrame, ts_col: str, keys: Sequence[str] = ()) -> Da
     return df.groupBy(*keys).agg(*aggs) if keys else df.agg(*aggs)
 
 
-def run_summary(
-    df: DataFrame, key: str, ts_col: str, value_col: str
-) -> DataFrame:
-    """A3: per-source run log — counts + from/to + value stats
-    (clarity.js:192-208 summary())."""
-    return df.groupBy(key).agg(
-        F.count(F.lit(1)).alias("n_measures"),
-        F.min(ts_col).alias("from_ts"),
-        F.max(ts_col).alias("to_ts"),
-        (
-            F.sum(F.col(value_col).cast("decimal(27,2)")).cast("double")
-            / F.count(F.lit(1)).cast("double")
-        ).alias("avg_value"),
-    )
-
-
 def distinct_count(df: DataFrame, keys: Sequence[str], col: str, approx: bool = False) -> DataFrame:
     """A4: distinct cardinality (aernode.js:115 Set().size). Exact for
     oracle parity; ``approx=True`` switches to HLL for the 100 TB path.

@@ -298,8 +298,8 @@ def checkpoint_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
 # run_log_roundtrip — K5 run-log sink + A3 run summaries (reference
 # providers.js:59-71 SNS publish from fetcher/index.js:29-34;
 # clarity.js:192-208 summary counters). One run per event_type plays
-# one run per source: summarize() computes the reference's counters,
-# publish() appends the structured row to the parquet status table,
+# one run per source: one grouped aggregate computes the counters that
+# summarize() observes on a run's measures write, publish() appends the structured row to the parquet status table,
 # and the readback — run_ts dropped, it is wall-clock by contract —
 # must reproduce every counter exactly. Proves the log table is a
 # faithful, queryable record of what each run processed.
@@ -331,10 +331,10 @@ def run_log_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("ts").alias("timestamp"),
         )
     )
-    # r15 (guide §1.2): ONE grouped aggregate computes every source's
-    # run counters — the exact per-source numbers summarize() produced
-    # one filtered full scan at a time (count / min ts / max ts over
-    # the same rows; 6 jobs -> 1). The log WRITES stay one publish()
+    # ONE grouped aggregate computes every source's run counters — the
+    # per-source numbers summarize() observes on each run's measures
+    # write (count / min ts / max ts over the same rows), in one job
+    # rather than one per source. The log WRITES stay one publish()
     # per source — the sink behavior under test is unchanged.
     summaries = (
         e.groupBy("event_type")
@@ -647,11 +647,11 @@ def scheduler_tick_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # ---------------------------------------------------------------------------
 # dry_run_preview — K6 (reference DRYRUN, providers.js:151-155): a
-# dry-run invocation of the SAME run_source computes the full per-run
-# summary (counts, stations — with the incremental bound applied, so
-# the preview matches what a real run would ingest) and then SHORT-
-# CIRCUITS every sink: no measures dir, no station store, no
-# checkpoint, no run-log row. The real run that follows must report
+# dry-run invocation of the SAME run_source runs the sink's plan into a
+# noop write and reports the full per-run summary (counts, stations —
+# with the incremental bound applied, so the preview matches what a
+# real run would ingest) while writing nothing: no measures dir, no
+# station store, no checkpoint, no run-log row. The real run that follows must report
 # the exact counts the preview promised and actually write them. Both
 # halves hash-verified against one oracle; wrote_nothing is checked
 # against the filesystem between the two calls.

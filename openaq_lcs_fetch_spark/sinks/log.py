@@ -11,10 +11,13 @@ from __future__ import annotations
 
 import datetime as _dt
 import threading
+from collections.abc import Callable
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
+from pyspark.sql import functions as F
 
 from ..localdf import local_df
+from ..sources.checkpoint import hwm_expr
 
 #: the run log is the ONE sink shared by concurrently-running sources
 #: (scheduler.run_tick overlaps them): concurrent appends to a single
@@ -57,30 +60,40 @@ def publish(
         local_df(spark, row, LOG_SCHEMA).write.mode("append").parquet(log_path)
 
 
-def summarize(measures: DataFrame, source: str) -> dict:
-    """A3: the reference's summary() counters (clarity.js:192-208).
+def summarize(
+    measures: DataFrame, source: str
+) -> tuple[DataFrame, Callable[[], dict]]:
+    """A3: the reference's summary() counters (clarity.js:192-208),
+    attached to ``measures`` as one observation.
 
-    The ``_hwm`` key is the checkpoint-format high-water mark computed
-    in the SAME single-pass aggregate (engine-side ``date_format``
-    under the pinned UTC session tz — the exact formatting
-    ``sources.checkpoint.high_water_mark`` performs, for the exact
-    reason documented there): ``Engine.run_source`` hands it to
-    ``advance`` so the checkpoint does not re-evaluate the whole
-    provider plan a second time just to recompute max(timestamp)."""
-    from pyspark.sql import functions as F
+    Returns ``(observed, read)``: the counters are computed by whatever
+    action runs ``observed`` (the measures sink write, or a dry run's
+    noop write), so the run summary costs no job of its own; ``read()``
+    returns them once that action finished. The ``_hwm`` key is the
+    checkpoint-format high-water mark (``checkpoint.hwm_expr``), which
+    ``Engine.run_source`` hands to ``advance`` so the checkpoint does
+    not re-evaluate the provider plan.
 
-    row = measures.agg(
+    A failed task attempt contributes nothing, so the counts stay exact
+    under task retries; on a cluster, a map stage re-run after a fetch
+    failure can add its rows twice (the max-based bounds are unaffected)."""
+    obs = Observation()
+    observed = measures.observe(
+        obs,
         F.count(F.lit(1)).alias("n"),
         F.min("timestamp").alias("from_ts"),
         F.max("timestamp").alias("to_ts"),
-        F.date_format(
-            F.max("timestamp"), "yyyy-MM-dd'T'HH:mm:ss.SSSSSS"
-        ).alias("hwm"),
-    ).collect()[0]
-    return {
-        "source": source,
-        "n_measures": row["n"],
-        "from_ts": row["from_ts"],
-        "to_ts": row["to_ts"],
-        "_hwm": row["hwm"],
-    }
+        hwm_expr("timestamp").alias("hwm"),
+    )
+
+    def read() -> dict:
+        row = obs.get
+        return {
+            "source": source,
+            "n_measures": row["n"],
+            "from_ts": row["from_ts"],
+            "to_ts": row["to_ts"],
+            "_hwm": row["hwm"],
+        }
+
+    return observed, read

@@ -19,15 +19,20 @@ from pyspark.sql import functions as F
 from ..localdf import local_df
 
 
+def csv_rows(measures: DataFrame) -> DataFrame:
+    """The K1 row shape: ``sensor_id,measure,timestamp``."""
+    return measures.select(
+        "sensor_id",
+        "measure",
+        F.date_format("timestamp", "yyyy-MM-dd'T'HH:mm:ss'Z'").alias("timestamp"),
+    )
+
+
 def write_measures_csv(measures: DataFrame, root: str, provider: str) -> str:
     """K1: gzipped CSV under measures/{provider}/."""
     path = f"{root}/measures/{provider}"
     (
-        measures.select(
-            "sensor_id",
-            "measure",
-            F.date_format("timestamp", "yyyy-MM-dd'T'HH:mm:ss'Z'").alias("timestamp"),
-        )
+        csv_rows(measures)
         .write.mode("append")
         .option("header", "true")
         .option("compression", "gzip")
@@ -56,23 +61,28 @@ def assemble_v01(
     ceil(day_rows / target_rows_per_payload) at scale.
     """
     shard = F.pmod(F.hash("sensor_id"), F.lit(n_shards)).alias("shard")
-    m_day = (
-        measures.withColumn("day", F.date_format("timestamp", "yyyy-MM-dd"))
-        .withColumn("shard", shard)
-        .groupBy("day", "shard")
-        .agg(
-            F.collect_list(
-                F.struct(
-                    F.col("sensor_id"),
-                    F.col("measure"),
-                    F.date_format(
-                        "timestamp", "yyyy-MM-dd'T'HH:mm:ss'Z'"
-                    ).alias("timestamp"),
-                    F.col("flags") if "flags" in measures.columns else F.lit(None).cast("map<string,string>").alias("flags"),
-                )
-            ).alias("measures")
-        )
+    rows = measures.select(
+        F.date_format("timestamp", "yyyy-MM-dd").alias("day"),
+        shard,
+        F.struct(
+            F.col("sensor_id"),
+            F.col("measure"),
+            F.date_format("timestamp", "yyyy-MM-dd'T'HH:mm:ss'Z'").alias("timestamp"),
+            F.col("flags") if "flags" in measures.columns else F.lit(None).cast("map<string,string>").alias("flags"),
+        ).alias("m"),
     )
+    if default_day is not None:
+        # the run date anchors the reference's one-envelope-per-batch
+        # behavior when a batch carries ZERO measures: one input row
+        # with a null measure (collect_list skips it) keeps the day in
+        # the grid, so the locations still ship. Being INPUT, it also
+        # keeps every exchange over ``rows`` non-empty, so AQE never
+        # prunes a stage (and an observation under it) on an empty batch.
+        rows = rows.unionByName(
+            local_df(rows.sparkSession, [(default_day, 0)], "day string, shard int")
+            .withColumn("m", F.lit(None).cast(rows.schema["m"].dataType))
+        )
+    m_day = rows.groupBy("day", "shard").agg(F.collect_list("m").alias("measures"))
     locs = (
         locations.withColumn(
             "shard", F.pmod(F.hash("location"), F.lit(n_shards))
@@ -93,28 +103,22 @@ def assemble_v01(
     )
     # full (day × shard) grid: a location whose shard got no measures
     # that day must still ship (and vice versa) — a bare m_day⋈locs
-    # left join would drop locations on measure-empty shards.
-    # ``default_day`` (the run date) keeps the reference's
-    # one-envelope-per-batch behavior when a batch carries ZERO
-    # measures: without it an empty m_day would empty the grid and the
-    # locations would ship nowhere.
-    days = m_day.select("day").distinct()
-    if default_day is not None:
-        days = days.unionByName(
-            local_df(m_day.sparkSession, [(default_day,)], "day string")
-        ).distinct()
-    grid = (
-        days
-        .crossJoin(
-            F.broadcast(
-                locs.sparkSession.range(n_shards).select(
-                    F.col("id").cast("int").alias("shard")
-                )
-            )
+    # left join would drop locations on measure-empty shards. The cells
+    # m_day lacks are unioned in (each day's shards minus those it has)
+    # rather than joined: AQE flips a grid⋈m_day join to a broadcast
+    # join at run time, racing the grid side's shuffle, so that plan's
+    # job count varies from run to run.
+    missing = (
+        rows.groupBy("day")
+        .agg(
+            F.array_except(
+                F.sequence(F.lit(0), F.lit(n_shards - 1)), F.collect_set("shard")
+            ).alias("shard")
         )
+        .select("day", F.explode("shard").alias("shard"))
     )
     return (
-        grid.join(m_day, ["day", "shard"], "left")
+        m_day.unionByName(missing, allowMissingColumns=True)
         .join(F.broadcast(locs), "shard", "left")
         .withColumn("locations", F.coalesce(F.col("locations"), empty_locs))
         .withColumn("measures", F.coalesce(F.col("measures"), empty_measures))

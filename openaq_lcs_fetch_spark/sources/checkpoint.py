@@ -60,6 +60,12 @@ def incremental_predicate(ts: Column, checkpoint: dict | None, default_since: st
     return ts > F.lit(since)
 
 
+def hwm_expr(ts_col: str) -> Column:
+    """The checkpoint-format mark aggregate: max(``ts_col``) formatted as
+    ``yyyy-MM-dd'T'HH:mm:ss.SSSSSS`` (see :func:`high_water_mark`)."""
+    return F.date_format(F.max(ts_col), "yyyy-MM-dd'T'HH:mm:ss.SSSSSS")
+
+
 def high_water_mark(df: DataFrame, ts_col: str) -> str | None:
     """A2: max timestamp of the processed batch (greatestTimestamp).
 
@@ -72,10 +78,7 @@ def high_water_mark(df: DataFrame, ts_col: str) -> str | None:
     the vacuum's footer-span reads fixed. Always emits microseconds so
     marks of the same format compare lexicographically in :func:`advance`.
     """
-    row = df.agg(
-        F.date_format(F.max(ts_col), "yyyy-MM-dd'T'HH:mm:ss.SSSSSS").alias("hwm")
-    ).collect()[0]
-    return row["hwm"]
+    return df.agg(hwm_expr(ts_col).alias("hwm")).collect()[0]["hwm"]
 
 
 #: how far AHEAD of the current batch a stored mark may sit before
@@ -125,12 +128,12 @@ def advance(
     under partial re-reads; hours ahead is the documented TZ-shift
     signature or a clock problem — either way worth a look).
 
-    ``hwm`` lets a caller that ALREADY aggregated the batch (e.g.
-    ``sinks.log.summarize``, which computes the identically-formatted
-    mark in its single pass) skip the extra full-plan evaluation; it
-    must be the ``high_water_mark``-format string over the same
-    ``(df, ts_col)``, or None for a batch that has no mark (no rows, or
-    no timestamps) — the stored mark then stays as it is."""
+    ``hwm`` lets a caller that already knows the batch's mark skip the
+    extra full-plan evaluation: ``sinks.log.summarize`` observes
+    :func:`hwm_expr` on the sink write itself. It must be the
+    ``high_water_mark``-format string over the same ``(df, ts_col)``,
+    or None for a batch that has no mark (no rows, or no timestamps) —
+    the stored mark then stays as it is."""
     prev = store.load(source) or {}
     if hwm is _UNCOMPUTED:
         hwm = high_water_mark(df, ts_col)

@@ -12,7 +12,6 @@ from openaq_lcs_fetch_spark.functions.ids import url_path_segment
 from openaq_lcs_fetch_spark.operators.filters import non_sentinel, status_ok, whitelist
 from openaq_lcs_fetch_spark.operators.reshape import explode_array
 from openaq_lcs_fetch_spark.operators.topk import global_top_k, latest_per_key
-from openaq_lcs_fetch_spark.operators.aggregates import run_summary
 from openaq_lcs_fetch_spark.sources.files import read_daily_partition
 
 
@@ -57,18 +56,6 @@ def test_global_top_k_and_latest(spark):
     assert top["id"] == 3
     latest = {r.sensor_id: r.id for r in latest_per_key(df, ["sensor_id"], "ts", "id").collect()}
     assert latest == {"s1": 2, "s2": 3}
-
-
-def test_run_summary(spark):
-    """A3: per-source run log counters (clarity.js:192-208)."""
-    df = spark.createDataFrame(
-        [("src", "2024-01-01T00:00:00", 10.0), ("src", "2024-01-02T00:00:00", 20.0)],
-        "source string, ts string, value double",
-    ).withColumn("ts", F.to_timestamp("ts"))
-    row = run_summary(df, "source", "ts", "value").first()
-    assert row["n_measures"] == 2
-    assert row["avg_value"] == pytest.approx(15.0)
-    assert row["from_ts"].day == 1 and row["to_ts"].day == 2
 
 
 def test_json_helpers(spark):
