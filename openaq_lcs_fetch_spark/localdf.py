@@ -1,10 +1,16 @@
-"""JVM-local construction for small driver-side DataFrames.
+"""Driver rows to Arrow, and JVM-local construction for small frames.
 
-``local_df(spark, rows, schema)`` is the engine's one constructor for
-frames built from Python rows (dimensions, specs, fixtures, the run-log
-row, empty stores). It hands the rows to Spark as one ``pyarrow.Table``,
-so the optimized plan is a ``LocalRelation``: the rows live in the JVM
-and no action on the frame starts a Python worker to unpickle them.
+``arrow_table(rows, schema)`` is the engine's one converter for Python
+rows: it returns the ``pyarrow.Table`` Spark would build from them.
+Two callers use it:
+
+- ``local_df(spark, rows, schema)`` is the one constructor for frames
+  built from Python rows (dimensions, specs, fixtures, empty stores).
+  It hands the table to Spark, so the optimized plan is a
+  ``LocalRelation``: the rows live in the JVM and no action on the frame
+  starts a Python worker to unpickle them.
+- ``sinks.log.publish`` writes the run-log row's table to parquet from
+  the driver, without Spark.
 
 Conversion follows ``SparkSession.createDataFrame(rows, schema)``
 exactly:
@@ -33,9 +39,9 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 
 
-def local_df(spark: SparkSession, rows, schema) -> DataFrame:
-    """``createDataFrame(rows, schema)`` as a ``LocalRelation`` (see the
-    module docstring)."""
+def arrow_table(rows, schema):
+    """The rows as the ``pyarrow.Table`` ``createDataFrame(rows, schema)``
+    would build (see the module docstring)."""
     import pyarrow as pa
     from pyspark.sql.pandas.types import to_arrow_schema
     from pyspark.sql.types import (
@@ -48,7 +54,7 @@ def local_df(spark: SparkSession, rows, schema) -> DataFrame:
     if isinstance(schema, str):
         schema = _parse_datatype_string(schema)
     if not isinstance(schema, StructType):
-        raise TypeError(f"local_df needs a struct schema, got {schema!r}")
+        raise TypeError(f"arrow_table needs a struct schema, got {schema!r}")
     verify, convert = _make_type_verifier(schema), _create_converter(schema)
     internal = []
     for row in rows:
@@ -56,8 +62,13 @@ def local_df(spark: SparkSession, rows, schema) -> DataFrame:
         internal.append(schema.toInternal(convert(row)))
     arrow = to_arrow_schema(schema, error_on_duplicated_field_names_in_struct=True)
     columns = zip(*internal) if internal else ([] for _ in arrow)
-    table = pa.Table.from_arrays(
+    return pa.Table.from_arrays(
         [pa.array(list(col), type=field.type) for col, field in zip(columns, arrow)],
         schema=arrow,
     )
-    return spark.createDataFrame(table, schema)
+
+
+def local_df(spark: SparkSession, rows, schema) -> DataFrame:
+    """``createDataFrame(rows, schema)`` as a ``LocalRelation`` (see the
+    module docstring)."""
+    return spark.createDataFrame(arrow_table(rows, schema), schema)

@@ -299,10 +299,12 @@ def checkpoint_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
 # providers.js:59-71 SNS publish from fetcher/index.js:29-34;
 # clarity.js:192-208 summary counters). One run per event_type plays
 # one run per source: one grouped aggregate computes the counters that
-# summarize() observes on a run's measures write, publish() appends the structured row to the parquet status table,
-# and the readback — run_ts dropped, it is wall-clock by contract —
-# must reproduce every counter exactly. Proves the log table is a
-# faithful, queryable record of what each run processed.
+# summarize() observes on a run's measures write, publish() writes the
+# structured row from the driver as its own file in the parquet status
+# table (no Spark job), and the readback — run_ts dropped, it is
+# wall-clock by contract — must reproduce every counter exactly. Proves
+# the log table is a faithful, queryable record of what each run
+# processed.
 # ---------------------------------------------------------------------------
 
 _RUNLOG_ORACLE = """

@@ -2,30 +2,31 @@
 
 The reference publishes a per-run summary to SNS (providers.js:59-71,
 called from fetcher/index.js:29-34 with 'fetcher/success' or
-'fetcher/error'). Here: a structured log row appended to a parquet
-status table — queryable, and a `foreachBatch` can emit the same row
-per micro-batch in streaming mode.
+'fetcher/error'). Here: a structured row in a parquet status table —
+queryable, and a `foreachBatch` can emit the same row per micro-batch
+in streaming mode.
+
+Each row is its own parquet file, written from the driver without a
+Spark job: ``localdf.arrow_table`` converts it exactly as
+``createDataFrame`` would, and the file lands under a dot-prefixed
+temp name that Spark's file listing skips, then is renamed to a unique
+``part-<uuid>.parquet``. Readers see a whole row or none, and
+concurrent runs (``scheduler.run_tick`` overlaps them) never share a
+file or a staging dir.
 """
 
 from __future__ import annotations
 
 import datetime as _dt
-import threading
+import os
+import uuid
 from collections.abc import Callable
 
 from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
-from ..localdf import local_df
+from ..localdf import arrow_table
 from ..sources.checkpoint import hwm_expr
-
-#: the run log is the ONE sink shared by concurrently-running sources
-#: (scheduler.run_tick overlaps them): concurrent appends to a single
-#: parquet path race on the shared ``_temporary`` staging dir (one
-#: job's commit/cleanup can delete the other's in-flight files), so the
-#: tiny 1-row append itself is serialized. Everything else in a source
-#: run touches per-source paths and overlaps freely.
-_PUBLISH_LOCK = threading.Lock()
 
 LOG_SCHEMA = (
     "run_ts timestamp, source string, status string, n_measures long, "
@@ -43,6 +44,13 @@ def publish(
     to_ts=None,
     message: str = "",
 ) -> None:
+    """Append one run row to the log at ``log_path``. Naive ``from_ts``
+    / ``to_ts`` (as ``collect()`` returns them) are host-local time.
+
+    ``spark`` is unused; it stays so the positional call shape, which
+    ``perfbench/tracing.py`` labels spans by, is unchanged."""
+    import pyarrow.parquet as pq
+
     row = [
         (
             # aware: a naive value would be read as host-local time
@@ -55,9 +63,17 @@ def publish(
             message,
         )
     ]
-    # a one-row local frame scans as one task: ONE parquet file per row
-    with _PUBLISH_LOCK:
-        local_df(spark, row, LOG_SCHEMA).write.mode("append").parquet(log_path)
+    table = arrow_table(row, LOG_SCHEMA)
+    name = f"part-{uuid.uuid4().hex}.parquet"
+    os.makedirs(log_path, exist_ok=True)
+    tmp = os.path.join(log_path, f".{name}.tmp")
+    try:
+        pq.write_table(table, tmp)
+        os.replace(tmp, os.path.join(log_path, name))
+    except BaseException:
+        if os.path.exists(tmp):
+            os.remove(tmp)
+        raise
 
 
 def summarize(

@@ -107,45 +107,3 @@ def read_parquet_evolving(spark: SparkSession, path: str) -> DataFrame:
     of historical partitions. At 100 TB this is footer-only work per
     file (no data scan to merge schemas)."""
     return spark.read.option("mergeSchema", "true").parquet(path)
-
-
-def read_csv_stream_with_quarantine(
-    spark: SparkSession,
-    path: str,
-    schema: T.StructType | str,
-    header: bool = True,
-    **options: str,
-):
-    """Streaming twin of :func:`read_csv_with_quarantine`: a permissive
-    ``readStream`` whose rows carry the corrupt-record column, plus the
-    two filter expressions a ``foreachBatch`` sink uses to split each
-    micro-batch into (good, quarantine) — a stream cannot fan out to
-    two sinks declaratively, so the split happens per batch (the same
-    dead-letter shape production streaming ingest uses).
-
-    Returns ``(stream_df, split)`` where ``split(batch_df)`` →
-    ``(good, bad)``.
-    """
-    corrupt = "_corrupt_record"
-    if isinstance(schema, str):
-        schema = T._parse_datatype_string(schema)  # type: ignore[attr-defined]
-    full = T.StructType(list(schema.fields) + [T.StructField(corrupt, T.StringType())])
-    reader = (
-        spark.readStream.option("header", str(header).lower())
-        .option("mode", "PERMISSIVE")
-        .option("columnNameOfCorruptRecord", corrupt)
-    )
-    for k, v in options.items():
-        reader = reader.option(k, v)
-    stream = reader.schema(full).csv(path)
-
-    from pyspark.sql import functions as F
-
-    def split(batch_df: DataFrame) -> tuple[DataFrame, DataFrame]:
-        good = batch_df.filter(F.col(corrupt).isNull()).drop(corrupt)
-        bad = batch_df.filter(F.col(corrupt).isNotNull()).select(
-            F.col(corrupt).alias("raw_line")
-        )
-        return good, bad
-
-    return stream, split

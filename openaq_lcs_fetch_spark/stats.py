@@ -215,41 +215,6 @@ def estimate_equijoin_rows(
     return (nl * nr) // ndv
 
 
-def collect_column_histogram(
-    df: DataFrame, col: str, bins: int = 20
-) -> dict[str, Any]:
-    """Equi-width histogram for an integer-valued column, the CBO's
-    third statistic (after NDV and min/max): TWO jobs total — a 1-row
-    bounds pass, then one map-side bucket rollup using the same
-    integer-exact ``range_bucket`` the audit queries pin cross-engine
-    (float bucketing is a measured trap, docs/ORACLE_NOTES.md).
-    Returns ``{"col", "lo", "hi", "bins", "counts": [b0..b{k-1}]}``;
-    empty input → counts all zero with lo/hi None.
-    """
-    from .operators.quantiles import range_bucket
-
-    b = df.agg(
-        F.min(col).alias("lo"), F.max(col).alias("hi")
-    ).collect()[0]
-    if b["lo"] is None:
-        return {"col": col, "lo": None, "hi": None, "bins": bins,
-                "counts": [0] * bins}
-    lo, hi = int(b["lo"]), int(b["hi"])
-    rows = (
-        df.filter(F.col(col).isNotNull())
-        .select(
-            range_bucket(col, str(lo), str(hi), bins).alias("bucket")
-        )
-        .groupBy("bucket")
-        .count()
-        .collect()
-    )
-    counts = [0] * bins
-    for r in rows:
-        counts[int(r["bucket"])] = int(r["count"])
-    return {"col": col, "lo": lo, "hi": hi, "bins": bins, "counts": counts}
-
-
 #: in-memory width guesses (bytes) per base dtype, for broadcast
 #: sizing — deliberately on the generous side (hash-relation overhead):
 #: the cost of a wrong "broadcast" call (executor OOM / driver fetch
@@ -545,38 +510,3 @@ def join_preflight(
         "hot_l": _hot(stats_l, key_l),
         "hot_r": _hot(stats_r, key_r),
     }
-
-
-def estimate_range_selectivity(hist: dict[str, Any], ge: int) -> float:
-    """Estimated fraction of rows with ``col >= ge`` from an equi-width
-    histogram: whole buckets above the threshold count fully, the
-    straddling bucket contributes its covered fraction under
-    within-bucket uniformity — the same interpolation
-    ``histogram_selectivity_audit`` (plans/layout.py) audits against
-    exact answers. Returns a fraction in [0, 1]; 0.0 on an empty
-    histogram.
-    """
-    lo, hi, k = hist["lo"], hist["hi"], hist["bins"]
-    counts = hist["counts"]
-    n = sum(counts)
-    if n == 0 or lo is None:
-        return 0.0
-    if ge <= lo:
-        return 1.0
-    if ge > hi:
-        return 0.0
-    w = hi - lo + 1
-    total = 0.0
-    for b, cnt in enumerate(counts):
-        # integer bucket bounds, identical to range_bucket's partition:
-        # bucket b covers [ceil(b*w/k), ceil((b+1)*w/k) - 1] offsets
-        lob = (b * w + k - 1) // k
-        upb = w - 1 if b == k - 1 else ((b + 1) * w + k - 1) // k - 1
-        if upb < lob:
-            continue  # empty cell when w < k
-        off = ge - lo
-        if off <= lob:
-            total += cnt
-        elif off <= upb:
-            total += cnt * (upb - off + 1) / (upb - lob + 1)
-    return total / n

@@ -951,51 +951,6 @@ def test_estimate_equijoin_rows_matches_fk_join(spark, sf_dir):
     assert estimate_equijoin_rows(sn, sc, "o_custkey", "c_custkey") == 0
 
 
-def test_column_histogram_and_range_selectivity(spark):
-    """Histogram collector + range estimator: uniform data estimates
-    exactly (the audit query's property, here at the API level), random
-    data stays within one bucket's mass of truth, and the degenerate
-    cases (empty input, threshold outside the range, w < bins) hold."""
-    import random
-
-    from openaq_lcs_fetch_spark.stats import (
-        collect_column_histogram, estimate_range_selectivity,
-    )
-
-    # uniform 0..99, 20 bins -> 5 per bucket; >= thresholds exact
-    df = spark.createDataFrame([(i,) for i in range(100)], "x long")
-    h = collect_column_histogram(df, "x", bins=20)
-    assert (h["lo"], h["hi"], sum(h["counts"])) == (0, 99, 100)
-    assert h["counts"] == [5] * 20
-    for ge, want in ((0, 1.0), (50, 0.5), (90, 0.1), (99, 0.01), (100, 0.0)):
-        got = estimate_range_selectivity(h, ge)
-        assert abs(got - want) < 1e-9, (ge, got, want)
-
-    # random skewed data: estimate within one bucket's mass of truth
-    rng = random.Random(7)
-    vals = [int(rng.random() ** 3 * 1000) for _ in range(500)]
-    df2 = spark.createDataFrame([(v,) for v in vals], "x long")
-    h2 = collect_column_histogram(df2, "x", bins=20)
-    assert sum(h2["counts"]) == 500
-    for ge in (10, 100, 500, 900):
-        truth = sum(1 for v in vals if v >= ge) / 500
-        est = estimate_range_selectivity(h2, ge)
-        assert abs(est - truth) <= max(h2["counts"]) / 500 + 1e-9, (ge, est, truth)
-
-    # empty + null-only inputs
-    he = collect_column_histogram(df.filter("x < 0"), "x", bins=8)
-    assert he["lo"] is None and he["counts"] == [0] * 8
-    assert estimate_range_selectivity(he, 5) == 0.0
-
-    # w < bins: single value, every bucket bound degenerate
-    h1 = collect_column_histogram(
-        spark.createDataFrame([(7,), (7,), (7,)], "x long"), "x", bins=20
-    )
-    assert sum(h1["counts"]) == 3
-    assert estimate_range_selectivity(h1, 7) == 1.0
-    assert estimate_range_selectivity(h1, 8) == 0.0
-
-
 def test_read_time_range_prunes_files(spark, tmp_path):
     """Manifest-pruned range read: only the files whose footer span
     overlaps the window are handed to the scan; unknown-span files are

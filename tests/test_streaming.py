@@ -535,50 +535,6 @@ def test_stateful_window_state_survives_restart(spark, tmp_path):
     assert rows.get(h10) == 5  # 3 recovered from state + 2 new, emitted once
 
 
-def test_streaming_csv_quarantine_foreach_batch(spark, tmp_path):
-    """Streaming dead-letter: malformed provider lines arriving over
-    two micro-batches land in the quarantine sink with their raw text;
-    good rows flow typed to the measures sink; counts reconcile with
-    what arrived."""
-    import os
-
-    from openaq_lcs_fetch_spark.sources.files import read_csv_stream_with_quarantine
-
-    src = str(tmp_path / "in")
-    good_out = str(tmp_path / "good")
-    bad_out = str(tmp_path / "bad")
-    os.makedirs(src)
-
-    def arrive(name, text):
-        with open(os.path.join(src, name), "w") as fh:
-            fh.write(text)
-
-    arrive("a.csv", "sensor,value\ns1,1.0\ns2,oops\n")
-    arrive("b.csv", "sensor,value\ns3,3.0\nbroken_line_only\ns4,4.0\n")
-
-    stream, split = read_csv_stream_with_quarantine(
-        spark, src + "/*.csv", "sensor string, value double"
-    )
-
-    def handle(batch_df, _epoch):
-        good, bad = split(batch_df)
-        good.write.mode("append").parquet(good_out)
-        bad.write.mode("append").parquet(bad_out)
-
-    q = (
-        stream.writeStream.foreachBatch(handle)
-        .option("checkpointLocation", str(tmp_path / "ckpt"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-
-    good = {r.sensor: r.value for r in spark.read.parquet(good_out).collect()}
-    assert good == {"s1": 1.0, "s3": 3.0, "s4": 4.0}
-    bad = sorted(r.raw_line for r in spark.read.parquet(bad_out).collect())
-    assert bad == ["broken_line_only", "s2,oops"]
-
-
 def test_provider_stream_roundtrip_hand_values(spark):
     """The two-cron-tick streaming proof against values computed BY
     HAND: tick 1 writes the 4 distinct file-1 rows (the intra-batch
